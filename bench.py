@@ -94,7 +94,7 @@ import sys
 import time
 
 from gpu_bdb_spark.queries.registry import bench_specs
-from gpu_bdb_spark.session import get_spark
+from gpu_bdb_spark.session import codegen_compilations, get_spark
 
 #: The frozen baseline-comparable set: exactly the 13 queries timed in
 #: BENCH_r01 (36.958 s recorded baseline at sf0.1). Never grows — new
@@ -237,6 +237,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     spread: dict[str, float] = {}
+    codegen: dict[str, list[int]] = {}
     for name, spec in sorted(specs.items()):
         # prime this query's codegen units at the tiny SF (untimed; see
         # module docstring)
@@ -244,12 +245,15 @@ def main() -> None:
             spec.fn(spark, prime_dir).write.format(
                 "noop").mode("overwrite").save()
         runs: list[float] = []
+        codegen[name] = []
         for _ in range(min(2, repeats) if name in HEAVY_TWICE
                        else repeats):
+            c0 = codegen_compilations(spark)
             t0 = time.perf_counter()
             df = spec.fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
+            codegen[name].append(codegen_compilations(spark) - c0)
         timings[name] = round(min(runs), 3)
         spread[name] = round(max(runs) - min(runs), 3)
         print(f"  {name}: best {timings[name]:.3f}s "
@@ -323,13 +327,14 @@ def main() -> None:
             throughput=throughput, throughput16=throughput16,
             scale_timings=scale_timings,
             scale_dir=scale_dir if scale_timings else None,
-            tp_runs=tp_runs or None, scale_spread=scale_spread):
+            tp_runs=tp_runs or None, scale_spread=scale_spread,
+            codegen=codegen):
         print(line)
 
 
 def result_lines(*, sf, repeats, timings, spread, base_total, full_total,
                  throughput, throughput16, scale_timings, scale_dir,
-                 tp_runs=None, scale_spread=None):
+                 tp_runs=None, scale_spread=None, codegen=None):
     """The two stdout JSON lines: detail first, compact headline LAST.
 
     The driver captures only a 2000-char stdout TAIL and parses the JSON
@@ -354,6 +359,10 @@ def result_lines(*, sf, repeats, timings, spread, base_total, full_total,
         "queries": timings,
         "spread": spread,
         "repeats": repeats,
+        # Janino compilations per timed repeat (after priming): a warm
+        # repeat above 0 is a query whose generated code misses the
+        # codegen cache on every call.
+        "codegen_compiles": codegen,
         # Frozen per-query idle-machine floor + frozen-13 total band
         # (sf0.1-denominated; null elsewhere) — lets a reader call a
         # mover without a control run: best ≈ floor ⇒ noise-free

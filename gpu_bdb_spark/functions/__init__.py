@@ -71,27 +71,6 @@ def r6(col: Column, alias: str | None = None) -> Column:
     return out.alias(alias) if alias else out
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<float|double> columns, JVM-side.
-
-    Uses zip_with + aggregate (whole-stage-codegen'd higher-order
-    functions) — no Python UDF. Scale note: O(dim) per pair; for top-k
-    search over N×M pairs see operators/similarity.py for the LSH-bucketed
-    path.
-    """
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(ad, bd, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda v: F.sqrt(  # noqa: E731
-        F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    return dot / (norm(ad) * norm(bd))
-
-
 def tokenize(text: str | Column, pattern: str = r"\s+") -> Column:
     """Whitespace tokenization to array<string>, empty tokens removed.
 

@@ -152,13 +152,3 @@ def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
     (reference dask-sql entry point: c.create_table, q01_utils.py:43-46)."""
     for name in names:
         _base_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def write_result(df: DataFrame, output_dir: str, file_format: str = "parquet") -> None:
-    """ETL result sink (reference bdb_tools/utils.py:117-147:
-    overwrite qNN-results.parquet/csv)."""
-    writer = df.write.mode("overwrite")
-    if file_format == "csv":
-        writer.option("header", True).csv(output_dir)
-    else:
-        writer.parquet(output_dir)

@@ -16,7 +16,7 @@ which (user, session_seq) preserves deterministically.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -72,38 +72,6 @@ def session_stats(
         F.count(F.lit(1)).alias("n_events"),
         ((F.max(us) - F.min(us)) / F.lit(1_000_000.0)).alias("duration_s"),
     )
-
-
-def last_n_before(
-    df: DataFrame,
-    user_col: str,
-    ts_col: str,
-    payload: Column,
-    n: int,
-    within_s: int | None = None,
-) -> DataFrame:
-    """Collect the previous-N payloads per user before each row — the
-    Spark form of the reference's q03 CUDA kernel (q03_utils.py:54-99:
-    last 5 viewed items within 10 days before a purchase).
-
-    Adds `prev_events`: array<struct<ts_us, payload>> of up to `n` strictly
-    earlier same-user rows, optionally time-bounded to `within_s`.
-    """
-    w = (
-        Window.partitionBy(user_col)
-        .orderBy(F.col(ts_col).asc())
-        .rowsBetween(-n, -1)
-    )
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    collected = F.collect_list(F.struct(us.alias("ts_us"), payload.alias("payload"))).over(w)
-    out = df.withColumn("prev_events", collected)
-    if within_s is not None:
-        bound = us - F.lit(within_s * 1_000_000)
-        out = out.withColumn(
-            "prev_events",
-            F.filter(F.col("prev_events"), lambda e: e["ts_us"] >= bound),
-        )
-    return out
 
 
 def session_paths(

@@ -46,10 +46,6 @@ def has_broadcast_join(plan: str) -> bool:
     return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def has_sort_merge_join(plan: str) -> bool:
-    return "SortMergeJoin" in plan
-
-
 def has_partial_aggregate(plan: str) -> bool:
     """Two-phase aggregation: a partial HashAggregate before the exchange
     (map-side combine — the reference does this by hand, q02:119-120)."""
@@ -60,22 +56,3 @@ def has_top_k(plan: str) -> bool:
     """orderBy+limit compiled to distributed TakeOrderedAndProject (no
     global sort materialization)."""
     return "TakeOrderedAndProject" in plan
-
-
-def whole_stage_codegen_spans(plan: str) -> int:
-    """Number of WholeStageCodegen spans (wider is better — JVM-compiled
-    pipelines, SURVEY 'Stay JVM-side')."""
-    return sum(
-        1 for line in plan.splitlines() if "WholeStageCodegen" in line
-    )
-
-
-def count_exchanges(plan: str) -> int:
-    """Shuffle count — every Exchange is a full network/disk round at
-    scale; queries assert an upper bound."""
-    return sum(
-        1
-        for line in plan.splitlines()
-        if line.strip().startswith(("Exchange", "+- Exchange"))
-        or "+- Exchange" in line
-    )

@@ -67,14 +67,20 @@ def _sessionized_clicks(tables: Tables, timeout_s: int = 3600) -> DataFrame:
 def q02(spark: SparkSession, tables: Tables, *, item_sk=10001,
         timeout_s=3600, limit=30) -> DataFrame:
     """Items viewed in the same session as item `item_sk`
-    (reference q02:60-129)."""
-    sess = _sessionized_clicks(tables, timeout_s).select(
-        "wcs_user_sk", "session_seq", "wcs_item_sk").distinct()
-    target_sessions = sess.filter(F.col("wcs_item_sk") == item_sk).select(
-        "wcs_user_sk", "session_seq").distinct()
+    (reference q02:60-129).
+
+    Sessions containing `item_sk` are flagged by a window over
+    (user, session), which reuses the sessionize window's user-key
+    partitioning: no exchange, and the sessionize window runs once (a
+    self semi-join would run it once per side).
+    """
+    in_session = Window.partitionBy("wcs_user_sk", "session_seq")
     return (
-        sess.join(target_sessions, ["wcs_user_sk", "session_seq"], "left_semi")
-        .filter(F.col("wcs_item_sk") != item_sk)
+        _sessionized_clicks(tables, timeout_s)
+        .withColumn("has_item",
+                    F.max(F.col("wcs_item_sk") == item_sk).over(in_session))
+        .filter(F.col("has_item") & (F.col("wcs_item_sk") != item_sk))
+        .select("wcs_user_sk", "session_seq", "wcs_item_sk").distinct()
         .groupBy(F.col("wcs_item_sk").alias("item_sk_1"))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("item_sk_2", F.lit(item_sk).cast("long"))
@@ -239,8 +245,12 @@ def q05(spark: SparkSession, tables: Tables, *, category="Books",
             F.col("clicks_in_category").cast("long").alias(
                 "clicks_in_category"),
             "college_education", "male", "label")
+    # VectorAssembler names each input it casts to double after its own
+    # random uid, and the name lands in the generated code: hand it
+    # doubles so that a warm call reuses the compiled classes.
     assembled = VectorAssembler(
-        inputCols=feature_cols, outputCol="raw_features").transform(feats)
+        inputCols=feature_cols, outputCol="raw_features").transform(
+        feats.withColumns({c: F.col(c).cast("double") for c in feature_cols}))
     scaled = StandardScaler(
         inputCol="raw_features", outputCol="features", withMean=True,
         withStd=True).fit(assembled).transform(assembled)

@@ -80,6 +80,18 @@ def run_benchmark(
     return timings
 
 
+def _occurrence_key(out: dict[str, float], name: str) -> str:
+    """`name` on its first occurrence in one stream's timings, then
+    `name#2`, `name#3`, ...: a repeated name must not overwrite the
+    earlier time."""
+    if name not in out:
+        return name
+    k = 2
+    while f"{name}#{k}" in out:
+        k += 1
+    return f"{name}#{k}"
+
+
 def timings_json(timings: dict[int, QueryTiming]) -> str:
     return json.dumps(
         {f"q{n:02d}": t.best for n, t in sorted(timings.items())})
@@ -102,7 +114,8 @@ def run_throughput(
     scheduler handles it natively: each stream runs in its own FAIR
     pool so a long scan in one stream doesn't starve the others.
 
-    Returns {"wall_s", "n_streams", "per_stream": {stream: {qNN: s}}}.
+    Returns {"wall_s", "n_streams", "per_stream": {stream: {qNN: s}}};
+    a query repeated in one stream is keyed `qNN#2`, `qNN#3`, ...
     Throughput metric = n_streams · |queries| / wall_s (queries/sec).
     """
     from concurrent.futures import ThreadPoolExecutor
@@ -129,7 +142,8 @@ def run_throughput(
                         v.count()
             else:
                 result.write.format("noop").mode("overwrite").save()
-            out[f"q{n:02d}"] = round(time.perf_counter() - t0, 3)
+            out[_occurrence_key(out, f"q{n:02d}")] = round(
+                time.perf_counter() - t0, 3)
         sc.setLocalProperty("spark.scheduler.pool", None)
         return out
 
@@ -161,7 +175,8 @@ def run_registry_throughput(
     comparable either way as long as the session mode is held fixed
     (bench.py builds FAIR).
 
-    Returns {"wall_s", "n_streams", "queries_per_sec", "per_stream"}.
+    Returns {"wall_s", "n_streams", "queries_per_sec", "per_stream"};
+    `per_stream` keys repeats of a name like `run_throughput` does.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -180,7 +195,8 @@ def run_registry_throughput(
             t0 = time.perf_counter()
             specs[name].fn(spark, sf_dir).write.format("noop").mode(
                 "overwrite").save()
-            out[name] = round(time.perf_counter() - t0, 3)
+            out[_occurrence_key(out, name)] = round(
+                time.perf_counter() - t0, 3)
         sc.setLocalProperty("spark.scheduler.pool", None)
         return out
 

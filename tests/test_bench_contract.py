@@ -33,7 +33,8 @@ def _lines(n_queries=30, n_scale=12):
         scale_dir="/root/repo/.localdata/sf1zipf",
         tp_runs={"4": [2.9, 3.03], "16": [6.21, 5.8]},
         scale_spread={f"scale_query_name_{i:02d}": 1.5
-                      for i in range(n_scale)})
+                      for i in range(n_scale)},
+        codegen={name: [3, 0, 0] for name in timings})
 
 
 def test_headline_is_last_and_short():
@@ -97,3 +98,12 @@ def test_detail_carries_scale_spread():
     assert d["scale_spread"]["scale_query_name_00"] == 1.5
     assert d["scale_repeats"] == bench.SCALE_REPEATS
     assert "scale_spread" not in json.loads(headline)
+
+
+def test_detail_carries_codegen_compiles():
+    # Janino compilations per timed repeat live in the detail record
+    # only; the headline and its size contract are unchanged.
+    detail, headline = _lines()
+    assert json.loads(detail)["codegen_compiles"][
+        "some_query_name_000"] == [3, 0, 0]
+    assert "codegen_compiles" not in json.loads(headline)

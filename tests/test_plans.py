@@ -459,3 +459,21 @@ def test_rolling_entries_use_prefix_shape(spark, sf_dir):
         assert frames, (name, plan[:800])
         for fr in frames:
             assert "unboundedpreceding" in fr, (name, fr)
+
+
+def test_q02_sessionizes_once(spark):
+    """q02 flags the sessions that contain the target item with a
+    (user, session) window: it reuses the sessionize windows' user-key
+    exchange, so the two sessionize windows run once and only the
+    per-item count adds an exchange (a self semi-join ran them once per
+    side, behind five exchanges)."""
+    import re
+
+    from gpu_bdb_spark.queries.tpcxbb import Tables, tpcxbb_query
+
+    from .tpcxbb_fixture import build_fixture
+
+    tables = Tables(spark, frames=build_fixture(spark))
+    plan = formatted_plan(tpcxbb_query(2)(spark, tables))
+    assert len(re.findall(r"\(\d+\) Window", plan)) == 3, plan
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 2, plan

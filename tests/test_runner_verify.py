@@ -66,6 +66,28 @@ def test_throughput_phase_concurrent_streams(spark):
     assert out["queries_per_sec"] > 0
 
 
+def test_throughput_repeated_name_keeps_every_time(spark, sf_dir):
+    """A name repeated in one stream's list keeps each time: the
+    second and later occurrences are keyed `name#2`, `name#3`."""
+    from gpu_bdb_spark.runner import run_registry_throughput, run_throughput
+
+    frames = build_fixture(spark)
+    out = run_throughput(spark, frames=frames, queries=[9, 9, 9],
+                         n_streams=1)
+    assert list(out["per_stream"][0]) == ["q09", "q09#2", "q09#3"]
+
+    out = run_registry_throughput(
+        spark, sf_dir, ["pricing_summary", "agg_stats", "pricing_summary"],
+        n_streams=2)
+    # stream 1 runs the rotation [agg_stats, pricing_summary, pricing_summary]
+    assert list(out["per_stream"][0]) == [
+        "pricing_summary", "agg_stats", "pricing_summary#2"]
+    assert list(out["per_stream"][1]) == [
+        "agg_stats", "pricing_summary", "pricing_summary#2"]
+    assert all(t > 0 for s in out["per_stream"].values()
+               for t in s.values())
+
+
 def test_interleaved_collection_preserves_caches(spark, sf_dir):
     """r3 verdict item 9: the registry's construct-time cache clear is
     suspendable for interleaving harnesses. Inside
